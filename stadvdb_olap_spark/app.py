@@ -2,15 +2,21 @@
 
 SURVEY.md §2.11 parity:
 
-- **O1 sequential dim→fact DAG** (``/root/reference/app.py:13-21``): the
-  same five stages (user/customer, location, date, product/part dims,
-  then the fact) composed as DataFrame transforms. Ordering exists only
-  in the driver function; Spark's lineage turns the whole thing into one
-  DAG, and the dim "outputs" feed the fact as broadcast key-map joins
-  rather than driver-side dicts.
-- **O2 timing instrumentation** (``app.py:7,23-26``): wall clock per
-  stage around the materializing action, returned AND logged; row counts
-  ride the write job itself via ``df.observe`` (no post-write re-scan).
+- **O1 dim→fact DAG** (the reference's ``app.py:13-21``): the same five
+  stages (user/customer, location, date, product/part dims, then the
+  fact). The reference runs them in sequence because its fact FK lookup
+  reads the dims back from Postgres; here ``fact_star`` resolves its
+  surrogate keys from lineage (broadcast key-map joins, not driver-side
+  dicts), so no stage reads another's output. The five plans are built
+  in stage order on the calling thread (plan building and the
+  per-session scan cache stay single-threaded), then every stage lands
+  concurrently, one thread per stage, so their Spark jobs share the
+  executor slots instead of queueing behind each other.
+- **O2 timing instrumentation** (``app.py:7,23-26``): a stage's seconds
+  are its build time plus its own landing wall time, returned AND
+  logged; landings overlap, so per-stage seconds overlap too and do not
+  sum to the pipeline's wall. Row counts ride the write job itself via
+  ``df.observe`` (no post-write re-scan).
 - **O4 structured logging** (``ETL/user_ETL.py:12-14,84,97,139``):
   per-stage row counts and seconds through ``logging``.
 - **O3 context-managed connections** — subsumed by SparkSession
@@ -23,14 +29,18 @@ SURVEY.md §2.11 parity:
 
 from __future__ import annotations
 
+import contextlib
 import logging
 import time
-from typing import Callable
 
+from pyspark import InheritableThread
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 log = logging.getLogger("stadvdb_olap_spark.app")
+
+
+STAGES = ("dim_customer", "dim_location", "dim_date", "dim_part", "fact_star")
 
 
 def run_pipeline(
@@ -42,68 +52,124 @@ def run_pipeline(
     keep_versions: int | None = None,
 ) -> dict[str, dict[str, float | int]]:
     """Run the dim→fact warehouse build; return per-stage
-    ``{"rows": n, "seconds": s}``. With ``out_dir``, each stage also
-    writes ``<out_dir>/<stage>`` — as a parquet atomic job commit
-    (``table_format="parquet"``, the default) or as a DELTA-FORMAT
-    transaction-log commit (``table_format="delta"``,
+    ``{"rows": n, "seconds": s}`` in stage order. With ``out_dir``, each
+    stage also writes ``<out_dir>/<stage>`` — as a parquet atomic job
+    commit (``table_format="parquet"``, the default) or as a
+    DELTA-FORMAT transaction-log commit (``table_format="delta"``,
     sources/delta_log.py): every run lands as one overwrite version per
     table, the stage report records ``delta_version``, and earlier
     builds stay time-travelable. With delta, ``compact_target`` runs
     OPTIMIZE per table after the write (``optimize_version`` in the
     report) and ``keep_versions`` runs VACUUM with that retention —
     the load + maintenance loop a production lakehouse sink performs
-    per batch."""
+    per batch.
+
+    The stages land concurrently (module docstring, O1). Each thread
+    inherits the caller's job group and other local properties. A stage
+    that fails does not stop the others: once every thread has joined,
+    the first failure in stage order is re-raised."""
     from stadvdb_olap_spark.plans.catalog import REGISTRY, _ensure_loaded
-    from stadvdb_olap_spark.sources.sinks import write_table
+    from stadvdb_olap_spark.sources.delta_log import timestamp_micros
 
     if table_format not in ("parquet", "delta"):
         raise ValueError(f"table_format must be parquet|delta, got {table_format!r}")
     _ensure_loaded()
-    stages: list[tuple[str, Callable[[SparkSession, str], DataFrame]]] = [
-        (name, REGISTRY[name].fn)
-        for name in ("dim_customer", "dim_location", "dim_date", "dim_part",
-                     "fact_star")
-    ]
-    report: dict[str, dict[str, float | int]] = {}
-    for name, fn in stages:
+    built: list[tuple[str, DataFrame, Observation | None, float]] = []
+    errors: dict[str, BaseException] = {}
+    for name in STAGES:
         t0 = time.perf_counter()
-        df = fn(spark, sf_dir)
-        if out_dir is not None:
-            # df.observe collects the row count DURING the write job —
-            # no post-write re-read (a second full scan at 100 TB).
-            obs = Observation(f"{name}_rows")
-            observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            extra: dict[str, float | int] = {}
-            if table_format == "delta":
-                from stadvdb_olap_spark.sources.delta_log import (
-                    cleanup_log,
-                    compact_table,
-                    vacuum_table,
-                    write_delta,
-                )
+        try:
+            df = REGISTRY[name].fn(spark, sf_dir)
+            obs = None
+            if out_dir is not None:
+                # df.observe collects the row count DURING the write
+                # job — no post-write re-read (a second full scan at
+                # 100 TB).
+                obs = Observation(f"{name}_rows")
+                df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+        except Exception as exc:  # noqa: BLE001  # re-raised after the landings
+            errors[name] = exc
+            continue
+        built.append((name, df, obs, time.perf_counter() - t0))
 
-                table_dir = f"{out_dir}/{name}"
-                extra["delta_version"] = write_delta(
-                    observed, table_dir, mode="overwrite",
-                    operation="PIPELINE LOAD",
-                )
-                if compact_target is not None:
-                    extra["optimize_version"] = compact_table(
-                        spark, table_dir, target_files=compact_target
-                    )
-                if keep_versions is not None:
-                    # data retention (vacuum) + metadata retention
-                    # (cleanup_log) together keep footprint AND
-                    # _delta_log bounded across daily loads
-                    vacuum_table(table_dir, keep_versions=keep_versions)
-                    cleanup_log(table_dir, keep_versions=keep_versions)
+    landed: dict[str, tuple[int, dict[str, float | int], float]] = {}
+
+    def land(name: str, df: DataFrame, obs: Observation | None) -> None:
+        t0 = time.perf_counter()
+        try:
+            if out_dir is None:
+                rows, extra = df.count(), {}
             else:
-                write_table(observed, f"{out_dir}/{name}")
-            rows = int(obs.get["rows"])
-        else:
-            extra = {}
-            rows = df.count()
-        secs = round(time.perf_counter() - t0, 3)
+                extra = _write(spark, df, f"{out_dir}/{name}", table_format,
+                               compact_target, keep_versions)
+                rows = int(obs.get["rows"])
+        except Exception as exc:  # noqa: BLE001  # re-raised after the join
+            errors[name] = exc
+            return
+        landed[name] = (rows, extra, time.perf_counter() - t0)
+
+    threads = [
+        InheritableThread(target=land, args=(name, df, obs), session=spark,
+                          name=f"run_pipeline-{name}")
+        for name, df, obs, _ in built
+    ]
+    # Delta staging writes INT64-micros timestamps; pinning the session
+    # conf once, around every landing, keeps the concurrent writers from
+    # each saving/setting/restoring it (delta_log.timestamp_micros).
+    pin = timestamp_micros(spark) if table_format == "delta" else contextlib.nullcontext()
+    with pin:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+    for name in STAGES:
+        if name in errors:
+            raise errors[name]
+
+    report: dict[str, dict[str, float | int]] = {}
+    for name, _df, _obs, build_s in built:
+        rows, extra, land_s = landed[name]
+        secs = round(build_s + land_s, 3)
         report[name] = {"rows": rows, "seconds": secs, **extra}
         log.info("stage %s: %d rows in %.3fs", name, rows, secs)
     return report
+
+
+def _write(
+    spark: SparkSession,
+    df: DataFrame,
+    table_dir: str,
+    table_format: str,
+    compact_target: int | None,
+    keep_versions: int | None,
+) -> dict[str, float | int]:
+    """Write one stage to ``table_dir`` and run its Delta maintenance;
+    return the stage report's extra fields."""
+    if table_format == "parquet":
+        from stadvdb_olap_spark.sources.sinks import write_table
+
+        write_table(df, table_dir)
+        return {}
+    from stadvdb_olap_spark.sources.delta_log import (
+        cleanup_log,
+        compact_table,
+        vacuum_table,
+        write_delta,
+    )
+
+    extra: dict[str, float | int] = {
+        "delta_version": write_delta(
+            df, table_dir, mode="overwrite", operation="PIPELINE LOAD"
+        )
+    }
+    if compact_target is not None:
+        extra["optimize_version"] = compact_table(
+            spark, table_dir, target_files=compact_target
+        )
+    if keep_versions is not None:
+        # data retention (vacuum) + metadata retention (cleanup_log)
+        # together keep footprint AND _delta_log bounded across daily
+        # loads
+        vacuum_table(table_dir, keep_versions=keep_versions)
+        cleanup_log(table_dir, keep_versions=keep_versions)
+    return extra

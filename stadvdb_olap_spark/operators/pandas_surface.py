@@ -51,15 +51,23 @@ def asof_join_cogrouped(
 
     The caller must pre-deduplicate the right side to one row per
     (key, ts) so the match is deterministic. Each side is shuffled once
-    on its key; per-key matching is a vectorized numpy searchsorted over
-    the sorted right timestamps.
+    on its key bucket (below).
 
     TYPE CONTRACT: ``left_id``, ``left_key`` and ``right_val`` must all
     be integral (the output schema is declared long and missing matches
     use the nullable Int64 pandas dtype); timestamps may be timestamp or
-    date. For non-integral keys/values, map to surrogate longs first
+    date. A floating ``right_val`` passes only when every value is
+    integral (8.0 becomes 8); a non-integral value (8.5) fails the job
+    with pandas' ``TypeError`` rather than being truncated. For
+    non-integral keys/values, map to surrogate longs first
     (functions/keys.py) — the declarative twin in advanced_queries has
     no such restriction.
+
+    NULL-KEY CONTRACT: a NULL ``left_key`` matches right rows whose key
+    is also NULL, by timestamp like any other key (``merge_asof`` groups
+    NaN ``by`` keys together). This is NOT SQL ``ASOF JOIN`` semantics,
+    where NULL never equals NULL; filter NULL keys out of either side
+    first to get those.
 
     The cogroup key is a KEY-HASH BUCKET, not the raw key (guide §4:
     coarsen Python groups so Arrow batches are large): cogrouped

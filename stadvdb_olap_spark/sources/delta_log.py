@@ -59,6 +59,7 @@ remove, exactly the protocol's state reconstruction.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import shutil
@@ -866,6 +867,34 @@ def last_txn_version(table_dir: str, app_id: str) -> int | None:
 # ---------------------------------------------------------------------------
 
 
+_TS_TYPE_KEY = "spark.sql.parquet.outputTimestampType"
+
+
+@contextlib.contextmanager
+def timestamp_micros(spark: SparkSession):
+    """Write parquet timestamps as INT64 micros inside the block, not
+    Spark's default INT96: INT96 is deprecated in the parquet spec, is
+    not what production Delta writers emit, and — decisive here — INT96
+    column chunks carry NO min/max statistics, which would silence data
+    skipping on every timestamp column. No per-write option exists, so
+    this is the session conf, saved and restored. A session already on
+    micros is left alone: no conf write, so concurrent writers on one
+    session (``app.run_pipeline`` pins micros around its landings) never
+    race on a save/set/restore of their own."""
+    prev = spark.conf.get(_TS_TYPE_KEY, None)
+    if prev is not None and prev.upper() == "TIMESTAMP_MICROS":
+        yield
+        return
+    spark.conf.set(_TS_TYPE_KEY, "TIMESTAMP_MICROS")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(_TS_TYPE_KEY)
+        else:
+            spark.conf.set(_TS_TYPE_KEY, prev)
+
+
 def _stage_files(
     df: DataFrame,
     table_dir: str,
@@ -883,22 +912,8 @@ def _stage_files(
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
-    # INT64 micros, not Spark's default INT96: INT96 is deprecated in
-    # the parquet spec, is what production Delta writers emit, and —
-    # decisive here — INT96 column chunks carry NO min/max statistics,
-    # which would silence data skipping on every timestamp column.
-    # Session conf (no per-write option exists), saved and restored.
-    ts_key = "spark.sql.parquet.outputTimestampType"
-    sess = df.sparkSession
-    prev_ts = sess.conf.get(ts_key, None)
-    sess.conf.set(ts_key, "TIMESTAMP_MICROS")
-    try:
+    with timestamp_micros(df.sparkSession):
         writer.parquet(staging)
-    finally:
-        if prev_ts is None:
-            sess.conf.unset(ts_key)
-        else:
-            sess.conf.set(ts_key, prev_ts)
     adds: list[dict] = []
     for root, _dirs, names in os.walk(staging):
         rel_dir = os.path.relpath(root, staging)
@@ -1758,7 +1773,10 @@ def merge_delta_scd1(
             )
     paths = sorted(state["files"])
     now_ms = int(time.time() * 1000)
-    src_keys = source.select(*keys).dropDuplicates(keys)
+    # no dedup: both uses are semi/anti joins, whose results do not
+    # depend on duplicate build-side keys — a dedup would only add an
+    # aggregate and a shuffle in front of each broadcast
+    src_keys = source.select(*keys)
     hits: list[str] = []
     if paths:
         tagged = _tagged_live(spark, table_dir, state, paths)

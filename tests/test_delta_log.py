@@ -480,6 +480,33 @@ def test_delta_merge_scd1_copy_on_write(spark, tmp_path):
     with pytest.raises(ValueError, match="already committed"):
         merge_delta_scd1(spark, t, src, keys=["id"], txn=("merge_app", 3))
 
+    # NULL keys match null-safely, and one source can hit several files:
+    # the NULL-keyed and 20-keyed source rows replace their target rows
+    # in two different files; the third file keeps its path
+    t2 = str(tmp_path / "tbl2")
+    write_delta(
+        spark.createDataFrame([(None, 1), (10, 100)], "id long, v long").coalesce(1),
+        t2, mode="overwrite",
+    )
+    for rows in ([(20, 200), (21, 210)], [(30, 300)]):
+        write_delta(
+            spark.createDataFrame(rows, "id long, v long").coalesce(1), t2,
+            mode="append",
+        )
+    before = set(_replay(t2)["files"])
+    untouched = {p for p in before if p.startswith("part-00002-")}
+    src2 = spark.createDataFrame(
+        [(None, 9), (20, 299), (40, 400)], "id long, v long"
+    )
+    merge_delta_scd1(spark, t2, src2, keys=["id"])
+    after = set(_replay(t2)["files"])
+    assert len(before - after) == 2 and untouched <= after
+    assert table_history(t2)[-1]["operationParameters"]["matchedFiles"] == 2
+    assert sorted(
+        (tuple(r) for r in read_delta(spark, t2).collect()),
+        key=lambda r: (r[0] is not None, r[0] or 0),
+    ) == [(None, 9), (10, 100), (20, 299), (21, 210), (30, 300), (40, 400)]
+
 
 def test_delta_merge_rejects_schema_drift(spark, tmp_path):
     from stadvdb_olap_spark.sources.delta_log import merge_delta_scd1

@@ -155,7 +155,7 @@ def test_unknowns_degrade_to_keep():
 # ---------------------------------------------------------------------------
 
 
-def test_collect_file_stats_types_and_nulls(spark, tmp_path):
+def test_collect_file_stats_types_and_nulls(spark, tmp_path, monkeypatch):
     df = spark.sql(
         """
         SELECT * FROM VALUES
@@ -191,6 +191,49 @@ def test_collect_file_stats_types_and_nulls(spark, tmp_path):
     assert st["maxValues"]["ts"].startswith("2024-03-01 23:59:59")
     assert st["minValues"]["b"] is False and st["maxValues"]["b"] is True
     assert st["nullCount"] == {"id": 0, "v": 1, "s": 1, "d": 0, "ts": 0, "b": 0}
+
+    # The delta writer's staging step: a session on the INT96 default
+    # still gets INT64 timestamp min/max and has its conf restored; a
+    # session already on micros sees no conf write at all (concurrent
+    # writers on one session would race on a save/set/restore).
+    from pyspark.sql.conf import RuntimeConfig
+
+    from stadvdb_olap_spark.sources.delta_log import _stage_files
+
+    ts_key = "spark.sql.parquet.outputTimestampType"
+    conf_writes: list[tuple[str, str]] = []
+
+    def recording(method):
+        orig = getattr(RuntimeConfig, method)
+
+        def record(self, key, *args):
+            conf_writes.append((method, key))
+            return orig(self, key, *args)
+
+        return record
+
+    for method in ("set", "unset"):
+        monkeypatch.setattr(RuntimeConfig, method, recording(method))
+    for pinned in (None, "TIMESTAMP_MICROS"):
+        if pinned is not None:
+            spark.conf.set(ts_key, pinned)
+        conf_writes.clear()
+        try:
+            adds = _stage_files(
+                df.coalesce(1), str(tmp_path / f"staged_{pinned}"), 0, [], True, 0
+            )
+            after = spark.conf.get(ts_key, None)
+            ts_writes = [w for w in conf_writes if w[1] == ts_key]
+        finally:
+            spark.conf.unset(ts_key)
+        assert after == pinned
+        assert ts_writes == (
+            [("set", ts_key), ("unset", ts_key)] if pinned is None else []
+        )
+        [add] = adds
+        staged = json.loads(add["stats"])
+        assert staged["minValues"]["ts"].startswith("2024-01-05 06:30:00")
+        assert staged["maxValues"]["ts"].startswith("2024-03-01 23:59:59")
 
 
 # ---------------------------------------------------------------------------

@@ -6,6 +6,7 @@ key-map completeness, referential integrity of fact FKs, and idempotence.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from stadvdb_olap_spark.plans.catalog import REGISTRY, _ensure_loaded
@@ -271,6 +272,65 @@ def test_run_pipeline_on_delta_format_with_time_travel(spark, tmp_path):
         assert r1["fact_star"]["optimize_version"] > v1
     else:
         assert r1["fact_star"]["optimize_version"] == v1
+
+
+def test_run_pipeline_concurrent_landing(spark, duck, tmp_path):
+    """The five stages land concurrently: the report keeps stage order,
+    every table equals its catalog oracle, the Delta landing region's
+    timestamp-type pin is undone afterwards, and a count-only run
+    reports the same rows."""
+    from stadvdb_olap_spark.app import run_pipeline
+    from stadvdb_olap_spark.sources.delta_log import read_delta
+    from tests.conftest import assert_frames_match
+
+    ts_key = "spark.sql.parquet.outputTimestampType"
+    prior = spark.conf.get(ts_key, None)
+    out = str(tmp_path / "warehouse")
+    report = run_pipeline(spark, SF_DIR, out_dir=out, table_format="delta")
+    assert list(report) == [
+        "dim_customer", "dim_location", "dim_date", "dim_part", "fact_star"
+    ]
+    for name, m in report.items():
+        table = read_delta(spark, f"{out}/{name}")
+        assert table.count() == m["rows"], name
+        assert_frames_match(table, duck.execute(REGISTRY[name].oracle), name)
+    assert spark.conf.get(ts_key, None) == prior
+    # without out_dir the same concurrent path only counts
+    counted = run_pipeline(spark, SF_DIR)
+    assert {n: m["rows"] for n, m in counted.items()} == {
+        n: m["rows"] for n, m in report.items()
+    }
+
+
+def test_run_pipeline_reraises_first_failure_after_others_commit(
+    spark, tmp_path, monkeypatch
+):
+    """One stage failing while it lands and a later one failing while it
+    builds: the other three stages still commit, and the error raised is
+    the first in STAGE order (the landing failure), not in time."""
+    import dataclasses
+
+    from stadvdb_olap_spark.app import run_pipeline
+    from stadvdb_olap_spark.sources.delta_log import read_delta, table_versions
+
+    def fails_landing(spark, sf_dir):
+        return spark.range(3).select(
+            F.raise_error(F.lit("dim_location landing boom")).cast("string").alias("v")
+        )
+
+    def fails_build(spark, sf_dir):
+        raise RuntimeError("dim_part build boom")
+
+    for name, fn in (("dim_location", fails_landing), ("dim_part", fails_build)):
+        monkeypatch.setitem(REGISTRY, name, dataclasses.replace(REGISTRY[name], fn=fn))
+    out = str(tmp_path / "warehouse")
+    with pytest.raises(Exception, match="dim_location landing boom"):
+        run_pipeline(spark, SF_DIR, out_dir=out, table_format="delta")
+    for name in ("dim_customer", "dim_date", "fact_star"):
+        assert table_versions(f"{out}/{name}") == [0], name
+        assert read_delta(spark, f"{out}/{name}").count() > 0, name
+    for name in ("dim_location", "dim_part"):
+        assert not table_versions(f"{out}/{name}"), name
 
 
 def test_run_curation_pipeline_on_delta_format(spark, tmp_path):

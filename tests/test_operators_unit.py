@@ -865,6 +865,37 @@ def test_cogrouped_asof_equals_declarative_asof(spark):
     assert rows_a == rows_b and rows_a
 
 
+def test_cogrouped_asof_null_key_and_integral_value_contract(spark):
+    """The documented edges of asof_join_cogrouped: a NULL left key
+    matches NULL-keyed right rows by timestamp, an integral double value
+    passes as a long, and a non-integral one fails the job."""
+    from stadvdb_olap_spark.operators.pandas_surface import asof_join_cogrouped
+
+    left = spark.sql(
+        "SELECT * FROM VALUES (1L, NULL, TIMESTAMP '2024-01-02'),"
+        " (2L, 5L, TIMESTAMP '2024-01-02') AS t(id, k, ts)"
+    )
+
+    def right(v: str):
+        return spark.sql(
+            f"SELECT * FROM VALUES (CAST(NULL AS BIGINT), {v}, TIMESTAMP '2024-01-01'),"
+            f" (5L, {v}, TIMESTAMP '2024-01-01') AS t(k, v, ts)"
+        )
+
+    def join(v: str):
+        return sorted(
+            tuple(r)
+            for r in asof_join_cogrouped(
+                left, right(v), "k", "k", "ts", "ts", "id", "v"
+            ).collect()
+        )
+
+    assert join("7L") == [(1, None, 7), (2, 5, 7)]
+    assert join("CAST(8.0 AS DOUBLE)") == [(1, None, 8), (2, 5, 8)]
+    with pytest.raises(Exception, match="TypeError"):
+        join("CAST(8.5 AS DOUBLE)")
+
+
 def test_trimmed_mean_small_group_edges(spark):
     """Groups smaller than 2k+1 shrink the trim to keep >= 1 value; a
     1-row group returns its own value; trims drop true extremes."""
