@@ -20,6 +20,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 from stadvdb_olap_spark.plans.catalog import REGISTRY, _ensure_loaded
 from stadvdb_olap_spark.session import get_session
 
+#: The calibration probe's idle-host range in seconds (SCALING.md
+#: "Host-load calibration"): the load WARN's threshold and the JSON
+#: line's ``idle_calibration_band_s``.
+IDLE_CALIBRATION_BAND_S = (0.076, 0.091)
+
 HEADLINE = [
     "flagship_fact_build",
     "fact_star",
@@ -102,7 +107,7 @@ def main() -> None:
     # the committed idle band, per-query walls are inflated by host load
     # and round-over-round comparisons should be re-run on a quieter
     # host (see SCALING.md "Host-load calibration").
-    band_hi = 0.091
+    band_hi = IDLE_CALIBRATION_BAND_S[1]
     if cal_best > 1.3 * band_hi:
         print(
             f"WARN: calibration_s={cal_best:.3f} is "
@@ -122,7 +127,7 @@ def main() -> None:
                 "sf": sf,
                 "runs": runs,
                 "calibration_s": round(cal_best, 3),
-                "idle_calibration_band_s": [0.076, 0.091],
+                "idle_calibration_band_s": list(IDLE_CALIBRATION_BAND_S),
             }
         )
     )

@@ -46,23 +46,18 @@ STAGES = ("dim_customer", "dim_location", "dim_date", "dim_part", "fact_star")
 def run_pipeline(
     spark: SparkSession,
     sf_dir: str,
-    out_dir: str | None = None,
+    out_dir: str,
     table_format: str = "parquet",
-    compact_target: int | None = None,
-    keep_versions: int | None = None,
 ) -> dict[str, dict[str, float | int]]:
-    """Run the dim→fact warehouse build; return per-stage
-    ``{"rows": n, "seconds": s}`` in stage order. With ``out_dir``, each
-    stage also writes ``<out_dir>/<stage>`` — as a parquet atomic job
-    commit (``table_format="parquet"``, the default) or as a
-    DELTA-FORMAT transaction-log commit (``table_format="delta"``,
+    """Run the dim→fact warehouse build into ``out_dir``; return
+    per-stage ``{"rows": n, "seconds": s}`` in stage order. Each stage
+    writes ``<out_dir>/<stage>`` — as a parquet atomic job commit
+    (``table_format="parquet"``, the default) or as a DELTA-FORMAT
+    transaction-log commit (``table_format="delta"``,
     sources/delta_log.py): every run lands as one overwrite version per
     table, the stage report records ``delta_version``, and earlier
-    builds stay time-travelable. With delta, ``compact_target`` runs
-    OPTIMIZE per table after the write (``optimize_version`` in the
-    report) and ``keep_versions`` runs VACUUM with that retention —
-    the load + maintenance loop a production lakehouse sink performs
-    per batch.
+    builds stay time-travelable. Table maintenance (OPTIMIZE, VACUUM,
+    log cleanup) is the caller's job, run after its own merges.
 
     The stages land concurrently (module docstring, O1). Each thread
     inherits the caller's job group and other local properties. A stage
@@ -74,19 +69,17 @@ def run_pipeline(
     if table_format not in ("parquet", "delta"):
         raise ValueError(f"table_format must be parquet|delta, got {table_format!r}")
     _ensure_loaded()
-    built: list[tuple[str, DataFrame, Observation | None, float]] = []
+    built: list[tuple[str, DataFrame, Observation, float]] = []
     errors: dict[str, BaseException] = {}
     for name in STAGES:
         t0 = time.perf_counter()
         try:
-            df = REGISTRY[name].fn(spark, sf_dir)
-            obs = None
-            if out_dir is not None:
-                # df.observe collects the row count DURING the write
-                # job — no post-write re-read (a second full scan at
-                # 100 TB).
-                obs = Observation(f"{name}_rows")
-                df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+            # df.observe collects the row count DURING the write job —
+            # no post-write re-read (a second full scan at 100 TB).
+            obs = Observation(f"{name}_rows")
+            df = REGISTRY[name].fn(spark, sf_dir).observe(
+                obs, F.count(F.lit(1)).alias("rows")
+            )
         except Exception as exc:  # noqa: BLE001  # re-raised after the landings
             errors[name] = exc
             continue
@@ -94,15 +87,11 @@ def run_pipeline(
 
     landed: dict[str, tuple[int, dict[str, float | int], float]] = {}
 
-    def land(name: str, df: DataFrame, obs: Observation | None) -> None:
+    def land(name: str, df: DataFrame, obs: Observation) -> None:
         t0 = time.perf_counter()
         try:
-            if out_dir is None:
-                rows, extra = df.count(), {}
-            else:
-                extra = _write(spark, df, f"{out_dir}/{name}", table_format,
-                               compact_target, keep_versions)
-                rows = int(obs.get["rows"])
+            extra = _write(df, f"{out_dir}/{name}", table_format)
+            rows = int(obs.get["rows"])
         except Exception as exc:  # noqa: BLE001  # re-raised after the join
             errors[name] = exc
             return
@@ -135,41 +124,18 @@ def run_pipeline(
     return report
 
 
-def _write(
-    spark: SparkSession,
-    df: DataFrame,
-    table_dir: str,
-    table_format: str,
-    compact_target: int | None,
-    keep_versions: int | None,
-) -> dict[str, float | int]:
-    """Write one stage to ``table_dir`` and run its Delta maintenance;
-    return the stage report's extra fields."""
+def _write(df: DataFrame, table_dir: str, table_format: str) -> dict[str, int]:
+    """Write one stage to ``table_dir``; return the stage report's extra
+    fields."""
     if table_format == "parquet":
         from stadvdb_olap_spark.sources.sinks import write_table
 
         write_table(df, table_dir)
         return {}
-    from stadvdb_olap_spark.sources.delta_log import (
-        cleanup_log,
-        compact_table,
-        vacuum_table,
-        write_delta,
-    )
+    from stadvdb_olap_spark.sources.delta_log import write_delta
 
-    extra: dict[str, float | int] = {
+    return {
         "delta_version": write_delta(
             df, table_dir, mode="overwrite", operation="PIPELINE LOAD"
         )
     }
-    if compact_target is not None:
-        extra["optimize_version"] = compact_table(
-            spark, table_dir, target_files=compact_target
-        )
-    if keep_versions is not None:
-        # data retention (vacuum) + metadata retention (cleanup_log)
-        # together keep footprint AND _delta_log bounded across daily
-        # loads
-        vacuum_table(table_dir, keep_versions=keep_versions)
-        cleanup_log(table_dir, keep_versions=keep_versions)
-    return extra

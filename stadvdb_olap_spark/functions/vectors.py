@@ -18,6 +18,11 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+#: Width of the ``embeddings`` fixture's vectors: the ``dim`` every
+#: catalog oracle passes to the ``*_sql`` builders below.
+EMB_DIM = 64
+
+
 def _c(col: Column | str) -> Column:
     return F.col(col) if isinstance(col, str) else col
 

@@ -2395,9 +2395,7 @@ def delta_concurrent_append_orders(spark: SparkSession, sf_dir: str) -> DataFram
     actions = [
         _commit_info("APPEND", {"mode": "APPEND", "partitionBy": "[]"}, now_ms)
     ] + [{"add": a} for a in adds_a]
-    v_a = _commit_retry(
-        table_dir, 1, actions, 10, allow_concurrent_adds=True
-    )
+    v_a = _commit_retry(table_dir, 1, actions, allow_concurrent_adds=True)
     retried_ok = v_a == 2
 
     # a non-commuting writer planned at the same stale snapshot (DELETE
@@ -2407,7 +2405,6 @@ def delta_concurrent_append_orders(spark: SparkSession, sf_dir: str) -> DataFram
             table_dir,
             1,
             [_commit_info("DELETE", {"predicate": "1=1"}, now_ms)],
-            10,
             allow_concurrent_adds=False,
         )
         conflict_detected = False

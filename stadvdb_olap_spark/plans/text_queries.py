@@ -1065,12 +1065,12 @@ _RRF_TOPK = 20
 
 
 def _dense_topk_sql() -> str:
-    from stadvdb_olap_spark.functions.vectors import cosine_sql
+    from stadvdb_olap_spark.functions.vectors import EMB_DIM, cosine_sql
 
     return f"""
 SELECT e.vec_id AS doc_id,
        row_number() OVER (
-           ORDER BY {cosine_sql('q.qv', 'e.embedding', 64)} DESC, e.vec_id) AS rank
+           ORDER BY {cosine_sql('q.qv', 'e.embedding', EMB_DIM)} DESC, e.vec_id) AS rank
 FROM embeddings e
 CROSS JOIN (SELECT embedding AS qv FROM embeddings
             WHERE vec_id = {_RRF_QVEC}) q

@@ -15,7 +15,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from stadvdb_olap_spark.functions.vectors import cosine_sql, l2_sq_sql
+from stadvdb_olap_spark.functions.vectors import EMB_DIM, cosine_sql, l2_sq_sql
 from stadvdb_olap_spark.operators.similarity import (
     brute_force_topk,
     cosine_topk_pandas,
@@ -38,7 +38,7 @@ WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings
            WHERE vec_id < {_N_QUERIES}),
 pairs AS (
     SELECT q.query_id, e.vec_id AS neighbor_id,
-           {cosine_sql('q.qv', 'e.embedding', 64)} AS cosine
+           {cosine_sql('q.qv', 'e.embedding', EMB_DIM)} AS cosine
     FROM q CROSS JOIN embeddings e
     WHERE q.query_id <> e.vec_id
 )
@@ -64,10 +64,10 @@ def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_near_dup_blocked",
     oracle=f"""
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       {cosine_sql('a.embedding', 'b.embedding', 64)} AS cosine
+       {cosine_sql('a.embedding', 'b.embedding', EMB_DIM)} AS cosine
 FROM embeddings a
 JOIN embeddings b ON a.label = b.label AND a.vec_id < b.vec_id
-WHERE {cosine_sql('a.embedding', 'b.embedding', 64)} >= {_NEAR_DUP_T}
+WHERE {cosine_sql('a.embedding', 'b.embedding', EMB_DIM)} >= {_NEAR_DUP_T}
 """,
 )
 def embedding_near_dup_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -125,7 +125,7 @@ q AS (SELECT vec_id AS query_id, embedding AS qv, t, sig
       FROM sigs WHERE vec_id < {_N_QUERIES}),
 pairs AS (
     SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id,
-           {cosine_sql('q.qv', 'c.embedding', 64)} AS cosine
+           {cosine_sql('q.qv', 'c.embedding', EMB_DIM)} AS cosine
     FROM q JOIN sigs c USING (t, sig)
     WHERE q.query_id <> c.vec_id
 )
@@ -178,7 +178,7 @@ WITH sigs AS MATERIALIZED ({_lsh_multi_sigs_sql()}),
 q AS ({_lsh_probe_sigs_sql(6)}),
 pairs AS (
     SELECT DISTINCT q.query_id, c.vec_id AS neighbor_id,
-           {cosine_sql('q.qv', 'c.embedding', 64)} AS cosine
+           {cosine_sql('q.qv', 'c.embedding', EMB_DIM)} AS cosine
     FROM q JOIN sigs c USING (t, sig)
     WHERE q.query_id <> c.vec_id
 )
@@ -254,7 +254,7 @@ a1 AS (
     SELECT vec_id, embedding, cid AS cell FROM (
         SELECT e.vec_id, e.embedding, c0.cid,
                row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {l2_sq_sql('e.embedding', 'c0.cv', 64)}, c0.cid) AS rn
+                   ORDER BY {l2_sq_sql('e.embedding', 'c0.cv', EMB_DIM)}, c0.cid) AS rn
         FROM embeddings e CROSS JOIN c0
     ) WHERE rn = 1
 ),
@@ -282,7 +282,7 @@ WITH q AS (SELECT vec_id AS query_id, embedding AS qv, label AS qlabel
            FROM embeddings WHERE vec_id < {_N_QUERIES}),
 pairs AS (
     SELECT q.query_id, e.vec_id AS neighbor_id, e.label AS neg_label,
-           {cosine_sql('q.qv', 'e.embedding', 64)} AS cosine
+           {cosine_sql('q.qv', 'e.embedding', EMB_DIM)} AS cosine
     FROM q CROSS JOIN embeddings e
     WHERE q.query_id <> e.vec_id AND q.qlabel <> e.label
 )
@@ -379,10 +379,10 @@ ham AS (
 ),
 rerank AS (
     SELECT query_id, neighbor_id, hamming,
-           {cosine_sql('qv', 'cv', 64)} AS cosine,
+           {cosine_sql('qv', 'cv', EMB_DIM)} AS cosine,
            row_number() OVER (
                PARTITION BY query_id
-               ORDER BY {cosine_sql('qv', 'cv', 64)} DESC, neighbor_id) AS rn
+               ORDER BY {cosine_sql('qv', 'cv', EMB_DIM)} DESC, neighbor_id) AS rn
     FROM ham WHERE hrn <= {_BQ_PREFILTER}
 )
 SELECT query_id, neighbor_id, CAST(hamming AS BIGINT) AS hamming,
@@ -427,7 +427,7 @@ def _argnear_sql(probe_limit: int, extra_where: str = "") -> str:
     SELECT vec_id, embedding, cid AS cell FROM (
         SELECT e.vec_id, e.embedding, c.cid,
                row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {l2_sq_sql('e.embedding', 'c.cv', 64)}, c.cid) AS rn
+                   ORDER BY {l2_sq_sql('e.embedding', 'c.cv', EMB_DIM)}, c.cid) AS rn
         FROM embeddings e CROSS JOIN c {extra_where}
     ) WHERE rn <= {probe_limit}
 """
@@ -442,7 +442,7 @@ ca AS ({_argnear_sql(1)}),
 qp AS ({_argnear_sql(_IVF_PROBE, f"WHERE e.vec_id < {_N_QUERIES}")}),
 pairs AS (
     SELECT qp.vec_id AS query_id, ca.vec_id AS neighbor_id,
-           {cosine_sql('qp.embedding', 'ca.embedding', 64)} AS cosine
+           {cosine_sql('qp.embedding', 'ca.embedding', EMB_DIM)} AS cosine
     FROM qp JOIN ca USING (cell)
     WHERE qp.vec_id <> ca.vec_id
 )
@@ -485,7 +485,7 @@ WITH c AS (SELECT vec_id AS cid, embedding AS cv FROM embeddings
 scored AS (
     SELECT e.vec_id, e.embedding, c.cid,
            row_number() OVER (PARTITION BY e.vec_id
-               ORDER BY {cosine_sql('e.embedding', 'c.cv', 64)} DESC, c.cid) AS rn
+               ORDER BY {cosine_sql('e.embedding', 'c.cv', EMB_DIM)} DESC, c.cid) AS rn
     FROM embeddings e CROSS JOIN c
 ),
 assigned AS (
@@ -495,7 +495,7 @@ dropped AS (
     SELECT DISTINCT a.vec_id
     FROM assigned a JOIN assigned b
       ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-    WHERE {cosine_sql('a.embedding', 'b.embedding', 64)} >= {_SEM_T}
+    WHERE {cosine_sql('a.embedding', 'b.embedding', EMB_DIM)} >= {_SEM_T}
 )
 SELECT a.vec_id,
        CAST(a.cluster AS BIGINT) AS cluster,
@@ -530,7 +530,7 @@ ca AS ({_argnear_sql(1)}),
 qp AS ({_argnear_sql(_IVF_PROBE, f"WHERE e.vec_id < {_N_QUERIES}")}),
 pairs AS (
     SELECT qp.vec_id AS query_id, ca.vec_id AS neighbor_id,
-           {cosine_sql('qp.embedding', 'ca.embedding', 64)} AS cosine
+           {cosine_sql('qp.embedding', 'ca.embedding', EMB_DIM)} AS cosine
     FROM qp JOIN ca USING (cell)
     WHERE qp.vec_id <> ca.vec_id
 )
@@ -577,7 +577,7 @@ assigned AS MATERIALIZED (
     SELECT vec_id, embedding, cid AS cluster FROM (
         SELECT e.vec_id, e.embedding, c.cid,
                row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY {l2_sq_sql('e.embedding', 'c.cv', 64)}, c.cid) AS rn
+                   ORDER BY {l2_sq_sql('e.embedding', 'c.cv', EMB_DIM)}, c.cid) AS rn
         FROM embeddings e CROSS JOIN c
     ) WHERE rn = 1
 ),
@@ -585,7 +585,7 @@ dropped AS (
     SELECT DISTINCT a.vec_id
     FROM assigned a JOIN assigned b
       ON a.cluster = b.cluster AND b.vec_id < a.vec_id
-    WHERE {cosine_sql('a.embedding', 'b.embedding', 64)} >= {_SEM_T}
+    WHERE {cosine_sql('a.embedding', 'b.embedding', EMB_DIM)} >= {_SEM_T}
 )
 SELECT a.vec_id,
        CAST(a.cluster AS BIGINT) AS cluster,
@@ -964,7 +964,7 @@ ex AS MATERIALIZED (
     SELECT neighbor_id FROM (
         SELECT e.vec_id AS neighbor_id,
                row_number() OVER (
-                   ORDER BY {l2_sq_sql('e.embedding', 'q.qv', 64)}, e.vec_id
+                   ORDER BY {l2_sq_sql('e.embedding', 'q.qv', EMB_DIM)}, e.vec_id
                ) AS rn
         FROM embeddings e
         CROSS JOIN (SELECT embedding AS qv FROM embeddings
@@ -1080,7 +1080,7 @@ sel{i} AS MATERIALIZED (
     )
     return f"""
 WITH cands AS MATERIALIZED (
-    SELECT e.vec_id, {cosine_sql('q.qv', 'e.embedding', 64)} AS rel
+    SELECT e.vec_id, {cosine_sql('q.qv', 'e.embedding', EMB_DIM)} AS rel
     FROM embeddings e
     CROSS JOIN (SELECT embedding AS qv FROM embeddings
                 WHERE vec_id = {_MMR_QUERY}) q
@@ -1090,7 +1090,7 @@ WITH cands AS MATERIALIZED (
 ),
 pairs AS MATERIALIZED (
     SELECT a.vec_id AS a, b.vec_id AS b,
-           {cosine_sql('ea.embedding', 'eb.embedding', 64)} AS sim
+           {cosine_sql('ea.embedding', 'eb.embedding', EMB_DIM)} AS sim
     FROM cands a JOIN cands b ON a.vec_id <> b.vec_id
     JOIN embeddings ea ON ea.vec_id = a.vec_id
     JOIN embeddings eb ON eb.vec_id = b.vec_id
@@ -1228,10 +1228,10 @@ coarse AS (
 ),
 rerank AS (
     SELECT query_id, neighbor_id, prefix_cosine,
-           {cosine_sql('qv', 'cv', 64)} AS cosine,
+           {cosine_sql('qv', 'cv', EMB_DIM)} AS cosine,
            row_number() OVER (
                PARTITION BY query_id
-               ORDER BY {cosine_sql('qv', 'cv', 64)} DESC, neighbor_id) AS rn
+               ORDER BY {cosine_sql('qv', 'cv', EMB_DIM)} DESC, neighbor_id) AS rn
     FROM coarse WHERE prn <= {_MRL_PREFILTER}
 )
 SELECT query_id, neighbor_id, prefix_cosine, cosine,
@@ -1379,7 +1379,7 @@ short AS (
 rer AS (
     SELECT CAST({_PQF_QUERY} AS BIGINT) AS query_id,
            e.vec_id AS neighbor_id,
-           {l2_sq_sql('e.embedding', 'q.qv', 64)} AS exact_dist_sq
+           {l2_sq_sql('e.embedding', 'q.qv', EMB_DIM)} AS exact_dist_sq
     FROM embeddings e
     JOIN short ON e.vec_id = short.neighbor_id
     CROSS JOIN (SELECT embedding AS qv FROM embeddings
@@ -1519,7 +1519,7 @@ ex AS MATERIALIZED (
     SELECT neighbor_id FROM (
         SELECT e.vec_id AS neighbor_id,
                row_number() OVER (
-                   ORDER BY {l2_sq_sql('e.embedding', 'q.qv', 64)}, e.vec_id
+                   ORDER BY {l2_sq_sql('e.embedding', 'q.qv', EMB_DIM)}, e.vec_id
                ) AS rn
         FROM embeddings e
         CROSS JOIN (SELECT embedding AS qv FROM embeddings
@@ -1667,7 +1667,7 @@ short AS (
 rer AS (
     SELECT CAST({_IVFADC_QUERY} AS BIGINT) AS query_id,
            e.vec_id AS neighbor_id,
-           {l2_sq_sql('e.embedding', 'q.qv', 64)} AS exact_dist_sq
+           {l2_sq_sql('e.embedding', 'q.qv', EMB_DIM)} AS exact_dist_sq
     FROM embeddings e
     JOIN short ON e.vec_id = short.neighbor_id
     CROSS JOIN (SELECT embedding AS qv FROM embeddings
@@ -1821,7 +1821,7 @@ ex AS MATERIALIZED (
     SELECT neighbor_id FROM (
         SELECT e.vec_id AS neighbor_id,
                row_number() OVER (
-                   ORDER BY {l2_sq_sql('e.embedding', 'q.qv', 64)}, e.vec_id
+                   ORDER BY {l2_sq_sql('e.embedding', 'q.qv', EMB_DIM)}, e.vec_id
                ) AS rn
         FROM embeddings e
         CROSS JOIN (SELECT embedding AS qv FROM embeddings

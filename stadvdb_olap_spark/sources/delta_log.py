@@ -29,7 +29,7 @@ Scope (documented, like versioned.py's):
   so a ``_staging_*`` directory seen during vacuum is an orphan from a
   crashed write and is reclaimed.
 - **Parquet checkpoints** (the protocol's ``N.checkpoint.parquet`` +
-  ``_last_checkpoint``): every ``checkpoint_interval`` commits the
+  ``_last_checkpoint``): every ``CHECKPOINT_INTERVAL`` commits the
   reconstructed state is written as one parquet file of actions, and
   ``_replay`` starts from the newest checkpoint at-or-below the target
   version — reads stay O(interval) in commit count instead of
@@ -55,6 +55,14 @@ by ``df.write.parquet`` and only RENAMED into the table root; the log
 records paths + sizes. Reads pin the schema from the last ``metaData``
 action (never inference) and scan only the live file set — add minus
 remove, exactly the protocol's state reconstruction.
+
+This module is the one owner of the commit format: ``_read_commit`` is
+the only parser of a commit file (``delta_stream`` reads through it
+too), ``_commit`` the only writer, ``_removes`` / ``_metadata`` /
+``_commit_info`` build every ``remove``, fresh ``metaData`` and
+``commitInfo`` action, ``_check_txn`` is the one idempotent-writer
+guard, and ``_commit_retry`` derives its conflict scope (the files it
+removes, its ``txn``) from the actions it commits.
 """
 
 from __future__ import annotations
@@ -82,8 +90,8 @@ _EARLIEST_RETAINED = "_earliest_retained"
 _HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 #: Commits between automatic parquet checkpoints (production Delta
-#: defaults to 10). Every write path passes its ``checkpoint_interval``
-#: through to :func:`_maybe_checkpoint`.
+#: defaults to 10). :func:`_maybe_checkpoint` reads it at every commit,
+#: so a test that needs another cadence monkeypatches this constant.
 CHECKPOINT_INTERVAL = 10
 
 
@@ -306,12 +314,43 @@ def _validate_constraints(
         )
 
 
-def set_check_constraint(
-    spark: SparkSession,
+def _alter_configuration(
     table_dir: str,
-    name: str,
-    expr: str,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
+    operation: str,
+    params: dict,
+    edit,
+    min_writer_version: int | None = None,
+    allow_concurrent_adds: bool = True,
+) -> int:
+    """One metadata-only commit (ALTER TABLE): replay, refuse
+    unwritable tables, let ``edit(state, config)`` validate and change a
+    copy of the table configuration in place, then commit commitInfo, a
+    writer-protocol bump to ``min_writer_version`` when the table is
+    below it, and the table's metaData carrying the new configuration."""
+    state = _replay(table_dir)
+    _require_writable(state, table_dir)
+    config = dict(state["meta"].get("configuration") or {})
+    edit(state, config)
+    actions = [_commit_info(operation, params, int(time.time() * 1000))]
+    proto = state["protocol"]
+    if min_writer_version and proto.get("minWriterVersion", 2) < min_writer_version:
+        actions.append(
+            {
+                "protocol": {
+                    "minReaderVersion": proto.get("minReaderVersion", 1),
+                    "minWriterVersion": min_writer_version,
+                }
+            }
+        )
+    actions.append({"metaData": dict(state["meta"], configuration=config)})
+    return _commit_retry(
+        table_dir, state["version"] + 1, actions,
+        allow_concurrent_adds=allow_concurrent_adds,
+    )
+
+
+def set_check_constraint(
+    spark: SparkSession, table_dir: str, name: str, expr: str
 ) -> int:
     """ALTER TABLE ... ADD CONSTRAINT ... CHECK (expr): validate the
     EXISTING table satisfies ``expr`` (one full predicate-pushed scan —
@@ -321,98 +360,56 @@ def set_check_constraint(
     protocol version that obliges writers to enforce checks). Every
     subsequent write through this engine validates its staged batch
     against the constraint before committing."""
-    state = _replay(table_dir)
-    _require_writable(state, table_dir)
-    if name in table_constraints(state["meta"]):
-        raise ValueError(f"constraint {name!r} already exists on {table_dir}")
-    live = sorted(state["files"])
-    if live:
-        df = _read_adds(spark, table_dir, state, live)
-        bad = ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
-        if df.where(bad).limit(1).count() > 0:
-            raise ValueError(
-                f"existing rows of {table_dir} violate CHECK ({expr}); "
-                "constraint not added"
-            )
-    now_ms = int(time.time() * 1000)
-    config = dict(state["meta"].get("configuration") or {})
-    config[f"delta.constraints.{name}"] = expr
-    actions: list[dict] = [
-        _commit_info(
-            "ADD CONSTRAINT", {"name": name, "expr": expr}, now_ms
-        )
-    ]
-    if state["protocol"].get("minWriterVersion", 2) < 3:
-        actions.append(
-            {
-                "protocol": {
-                    "minReaderVersion": state["protocol"].get(
-                        "minReaderVersion", 1
-                    ),
-                    "minWriterVersion": 3,
-                }
-            }
-        )
-    actions.append(
-        {"metaData": dict(state["meta"], configuration=config)}
-    )
-    return _commit_retry(
-        table_dir, state["version"] + 1, actions, checkpoint_interval,
+
+    def edit(state: dict, config: dict) -> None:
+        if name in table_constraints(state["meta"]):
+            raise ValueError(f"constraint {name!r} already exists on {table_dir}")
+        live = sorted(state["files"])
+        if live:
+            df = _read_adds(spark, table_dir, state, live)
+            bad = ~F.coalesce(F.expr(expr).cast("boolean"), F.lit(True))
+            if df.where(bad).limit(1).count() > 0:
+                raise ValueError(
+                    f"existing rows of {table_dir} violate CHECK ({expr}); "
+                    "constraint not added"
+                )
+        config[f"delta.constraints.{name}"] = expr
+
+    return _alter_configuration(
+        table_dir, "ADD CONSTRAINT", {"name": name, "expr": expr}, edit,
+        min_writer_version=3,
         allow_concurrent_adds=False,  # a racing batch was not validated
     )
 
 
-def drop_check_constraint(
-    table_dir: str,
-    name: str,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
-) -> int:
+def drop_check_constraint(table_dir: str, name: str) -> int:
     """ALTER TABLE ... DROP CONSTRAINT — metadata-only."""
-    state = _replay(table_dir)
-    _require_writable(state, table_dir)
-    key = f"delta.constraints.{name}"
-    config = dict(state["meta"].get("configuration") or {})
-    if key not in config:
-        raise ValueError(f"no constraint {name!r} on {table_dir}")
-    del config[key]
-    now_ms = int(time.time() * 1000)
-    actions = [
-        _commit_info("DROP CONSTRAINT", {"name": name}, now_ms),
-        {"metaData": dict(state["meta"], configuration=config)},
-    ]
-    return _commit_retry(
-        table_dir, state["version"] + 1, actions, checkpoint_interval
-    )
+
+    def edit(_state: dict, config: dict) -> None:
+        key = f"delta.constraints.{name}"
+        if key not in config:
+            raise ValueError(f"no constraint {name!r} on {table_dir}")
+        del config[key]
+
+    return _alter_configuration(table_dir, "DROP CONSTRAINT", {"name": name}, edit)
 
 
-def set_table_properties(
-    table_dir: str,
-    props: dict[str, str | None],
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
-) -> int:
+def set_table_properties(table_dir: str, props: dict[str, str | None]) -> int:
     """ALTER TABLE ... SET/UNSET TBLPROPERTIES: merge ``props`` into
     the table configuration (``None`` values unset keys) and commit the
     updated metaData. Metadata-only; properties survive later schema
     re-pins (write_delta/merge carry configuration forward)."""
-    state = _replay(table_dir)
-    _require_writable(state, table_dir)
-    config = dict(state["meta"].get("configuration") or {})
-    for k, v in props.items():
-        if v is None:
-            config.pop(k, None)
-        else:
-            config[k] = str(v)
-    now_ms = int(time.time() * 1000)
-    actions = [
-        _commit_info(
-            "SET TBLPROPERTIES",
-            {"properties": json.dumps(props, sort_keys=True)},
-            now_ms,
-        ),
-        {"metaData": dict(state["meta"], configuration=config)},
-    ]
-    return _commit_retry(
-        table_dir, state["version"] + 1, actions, checkpoint_interval
+
+    def edit(_state: dict, config: dict) -> None:
+        for k, v in props.items():
+            if v is None:
+                config.pop(k, None)
+            else:
+                config[k] = str(v)
+
+    return _alter_configuration(
+        table_dir, "SET TBLPROPERTIES",
+        {"properties": json.dumps(props, sort_keys=True)}, edit,
     )
 
 
@@ -749,15 +746,15 @@ def _load_checkpoint(table_dir: str, version: int) -> dict:
 def checkpoint_table(table_dir: str) -> int:
     """Write a parquet checkpoint of the CURRENT table state and point
     ``_last_checkpoint`` at it; returns the checkpointed version. Write
-    paths call this automatically every ``checkpoint_interval`` commits;
+    paths call this automatically every ``CHECKPOINT_INTERVAL`` commits;
     exposed for explicit maintenance."""
     state = _replay(table_dir)
     _write_checkpoint(table_dir, state)
     return state["version"]
 
 
-def _maybe_checkpoint(table_dir: str, version: int, interval: int | None) -> None:
-    if interval and version > 0 and version % interval == 0:
+def _maybe_checkpoint(table_dir: str, version: int) -> None:
+    if version > 0 and version % CHECKPOINT_INTERVAL == 0:
         state = _replay(table_dir, version)
         if any(a.get("deletionVector") for a in state["files"].values()):
             return  # never auto-checkpoint away another writer's DVs
@@ -818,24 +815,18 @@ def _replay(table_dir: str, version: int | None = None) -> dict:
             f"{version}: missing {missing}"
         )
     for v in range(start + 1, version + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    files[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    files.pop(action["remove"]["path"], None)
-                elif "metaData" in action:
-                    meta = action["metaData"]
-                elif "protocol" in action:
-                    protocol = action["protocol"]
-                elif "txn" in action:
-                    t = action["txn"]
-                    txns[t["appId"]] = max(
-                        t["version"], txns.get(t["appId"], -1)
-                    )
+        for action in _read_commit(table_dir, v):
+            if "add" in action:
+                files[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                files.pop(action["remove"]["path"], None)
+            elif "metaData" in action:
+                meta = action["metaData"]
+            elif "protocol" in action:
+                protocol = action["protocol"]
+            elif "txn" in action:
+                t = action["txn"]
+                txns[t["appId"]] = max(t["version"], txns.get(t["appId"], -1))
     if meta is None:
         raise ValueError(f"no metaData action in {table_dir} log")
     _check_reader_protocol(
@@ -860,6 +851,19 @@ def last_txn_version(table_dir: str, app_id: str) -> int | None:
     if not table_versions(table_dir):
         return None
     return _replay(table_dir)["txns"].get(app_id)
+
+
+def _check_txn(txns: dict[str, int], txn: tuple[str, int] | None) -> None:
+    """The idempotent-writer guard: refuse ``txn=(app_id, version)``
+    when a replayed state's watermarks (``txns``) already hold that app
+    at ``version`` or newer — BEFORE any data is staged."""
+    if txn is None:
+        return
+    seen = txns.get(txn[0])
+    if seen is not None and seen >= txn[1]:
+        raise ValueError(
+            f"txn {txn[0]}@{txn[1]} already committed (latest {seen})"
+        )
 
 
 # ---------------------------------------------------------------------------
@@ -958,24 +962,26 @@ def _stage_files(
     return adds
 
 
-def _commit(
-    table_dir: str,
-    version: int,
-    actions: list[dict],
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
-) -> int:
+def _commit(table_dir: str, version: int, actions: list[dict]) -> int:
     """Put-if-absent commit (the protocol's log-store contract): "x"
     raises FileExistsError if another writer took this version, so a
     lost update is impossible — the loser retries at version+1. Writes
-    an automatic parquet checkpoint every ``checkpoint_interval``
+    an automatic parquet checkpoint every ``CHECKPOINT_INTERVAL``
     commits."""
     payload = "".join(json.dumps(a, sort_keys=True) + "\n" for a in actions)
     with open(_commit_path(table_dir, version), "x") as f:
         f.write(payload)
         f.flush()
         os.fsync(f.fileno())
-    _maybe_checkpoint(table_dir, version, checkpoint_interval)
+    _maybe_checkpoint(table_dir, version)
     return version
+
+
+def _read_commit(table_dir: str, version: int) -> list[dict]:
+    """The actions of commit ``version`` in file order — the one parser
+    of a commit file (``_commit`` is the one writer)."""
+    with open(_commit_path(table_dir, version)) as f:
+        return [json.loads(line) for line in f if line.strip()]
 
 
 class ConcurrentWriteError(RuntimeError):
@@ -989,9 +995,7 @@ def _commit_retry(
     table_dir: str,
     version: int,
     actions: list[dict],
-    checkpoint_interval: int | None,
     read_files: frozenset[str] | set[str] = frozenset(),
-    removed_files: frozenset[str] | set[str] = frozenset(),
     allow_concurrent_adds: bool = True,
     max_retries: int = 10,
 ) -> int:
@@ -1006,7 +1010,8 @@ def _commit_retry(
     - ``metaData`` / ``protocol`` change -> conflict (the transaction
       planned against a schema that no longer holds);
     - a ``remove`` of any file this transaction READ or is itself
-      removing -> conflict (ConcurrentDeleteRead / ConcurrentDeleteDelete);
+      removing (its own ``remove`` actions) -> conflict
+      (ConcurrentDeleteRead / ConcurrentDeleteDelete);
     - a ``dataChange`` add -> conflict unless ``allow_concurrent_adds``
       (appends commute with appends and with compaction of the OLD
       files; they do NOT commute with delete/merge/overwrite, whose row
@@ -1015,54 +1020,49 @@ def _commit_retry(
       -> conflict (the idempotence watermark advanced under us).
     """
     my_txn = next((a["txn"] for a in actions if "txn" in a), None)
+    removed_files = {a["remove"]["path"] for a in actions if "remove" in a}
     attempt = version
     for _ in range(max_retries + 1):
         try:
-            return _commit(table_dir, attempt, actions, checkpoint_interval)
+            return _commit(table_dir, attempt, actions)
         except FileExistsError:
             pass
         latest = table_versions(table_dir)[-1]
         for v in range(attempt, latest + 1):
-            with open(_commit_path(table_dir, v)) as f:
-                for line in f:
-                    if not line.strip():
-                        continue
-                    action = json.loads(line)
-                    if "metaData" in action or "protocol" in action:
+            for action in _read_commit(table_dir, v):
+                if "metaData" in action or "protocol" in action:
+                    raise ConcurrentWriteError(
+                        f"concurrent metaData/protocol change in "
+                        f"version {v} of {table_dir}; re-run against "
+                        "the new snapshot"
+                    )
+                if "remove" in action:
+                    p = action["remove"]["path"]
+                    if p in read_files or p in removed_files:
                         raise ConcurrentWriteError(
-                            f"concurrent metaData/protocol change in "
-                            f"version {v} of {table_dir}; re-run against "
-                            "the new snapshot"
+                            f"version {v} of {table_dir} removed "
+                            f"{p}, which this transaction "
+                            f"{'reads' if p in read_files else 'also removes'};"
+                            " re-run against the new snapshot"
                         )
-                    if "remove" in action:
-                        p = action["remove"]["path"]
-                        if p in read_files or p in removed_files:
-                            raise ConcurrentWriteError(
-                                f"version {v} of {table_dir} removed "
-                                f"{p}, which this transaction "
-                                f"{'reads' if p in read_files else 'also removes'};"
-                                " re-run against the new snapshot"
-                            )
-                    if "add" in action and action["add"].get(
-                        "dataChange", True
+                if "add" in action and action["add"].get("dataChange", True):
+                    if not allow_concurrent_adds:
+                        raise ConcurrentWriteError(
+                            f"version {v} of {table_dir} added data "
+                            "this transaction's row scope might "
+                            "include; re-run against the new snapshot"
+                        )
+                if "txn" in action and my_txn is not None:
+                    t = action["txn"]
+                    if (
+                        t["appId"] == my_txn["appId"]
+                        and t["version"] >= my_txn["version"]
                     ):
-                        if not allow_concurrent_adds:
-                            raise ConcurrentWriteError(
-                                f"version {v} of {table_dir} added data "
-                                "this transaction's row scope might "
-                                "include; re-run against the new snapshot"
-                            )
-                    if "txn" in action and my_txn is not None:
-                        t = action["txn"]
-                        if (
-                            t["appId"] == my_txn["appId"]
-                            and t["version"] >= my_txn["version"]
-                        ):
-                            raise ConcurrentWriteError(
-                                f"txn {t['appId']}@{t['version']} landed "
-                                f"concurrently in version {v}; this batch "
-                                "is already committed"
-                            )
+                        raise ConcurrentWriteError(
+                            f"txn {t['appId']}@{t['version']} landed "
+                            f"concurrently in version {v}; this batch "
+                            "is already committed"
+                        )
         attempt = latest + 1
     raise ConcurrentWriteError(
         f"gave up after {max_retries} retries racing writers on "
@@ -1081,6 +1081,43 @@ def _commit_info(operation: str, params: dict, now_ms: int) -> dict:
     }
 
 
+def _removes(
+    files: dict[str, dict], paths, now_ms: int, data_change: bool = True
+) -> list[dict]:
+    """``remove`` actions retiring ``paths``, each carrying the
+    partitionValues of its entry in the live map ``files``.
+    ``data_change=False`` marks a content-preserving rewrite (OPTIMIZE)."""
+    return [
+        {
+            "remove": {
+                "path": p,
+                "partitionValues": files[p].get("partitionValues", {}),
+                "deletionTimestamp": now_ms,
+                "dataChange": data_change,
+            }
+        }
+        for p in paths
+    ]
+
+
+def _metadata(
+    schema_json: str, parts: list[str], configuration: dict | None, now_ms: int
+) -> dict:
+    """A fresh ``metaData`` action (new table id) pinning ``schema_json``
+    and ``parts``. The ``configuration`` (constraints, appendOnly, other
+    table properties) is carried over, so it survives a schema re-pin."""
+    return {
+        "metaData": {
+            "id": uuid.uuid4().hex,
+            "format": {"provider": "parquet", "options": {}},
+            "schemaString": schema_json,
+            "partitionColumns": parts,
+            "configuration": dict(configuration or {}),
+            "createdTime": now_ms,
+        }
+    }
+
+
 # ---------------------------------------------------------------------------
 # Write / read
 # ---------------------------------------------------------------------------
@@ -1094,7 +1131,6 @@ def write_delta(
     txn: tuple[str, int] | None = None,
     partition_by: list[str] | None = None,
     merge_schema: bool = False,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
     """Commit ``df`` to ``table_dir`` in the Delta log format; returns
     the committed version. ``mode`` is ``append`` or ``overwrite``
@@ -1118,28 +1154,25 @@ def write_delta(
     foreachBatch replays need."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
-    if txn is not None:
-        seen = last_txn_version(table_dir, txn[0])
-        if seen is not None and seen >= txn[1]:
-            raise ValueError(
-                f"txn {txn[0]}@{txn[1]} already committed (latest {seen})"
-            )
     partition_by = list(partition_by or [])
     missing = [c for c in partition_by if c not in df.columns]
     if missing:
         raise ValueError(f"partition_by columns not in df: {missing}")
-    os.makedirs(_log_dir(table_dir), exist_ok=True)
     versions = table_versions(table_dir)
     version = (versions[-1] + 1) if versions else 0
     prior_files: dict[str, dict] = {}
     prior_schema: str | None = None
     prior_parts: list[str] = []
+    prior_config: dict | None = None
     if versions:
         prior = _replay(table_dir)
+        _check_txn(prior["txns"], txn)
         _require_writable(prior, table_dir)
         prior_files = prior["files"]
         prior_schema = prior["schema_json"]
         prior_parts = prior["partition_columns"]
+        prior_config = prior["meta"].get("configuration")
+    os.makedirs(_log_dir(table_dir), exist_ok=True)
 
     schema_json = df.schema.json()
     if versions and mode == "append":
@@ -1185,37 +1218,10 @@ def write_delta(
         or partition_by != prior_parts
     ):
         actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": schema_json,
-                    "partitionColumns": partition_by,
-                    # table properties (constraints, appendOnly, ...)
-                    # survive schema evolution / overwrite re-pins
-                    "configuration": (
-                        dict(prior["meta"].get("configuration") or {})
-                        if versions
-                        else {}
-                    ),
-                    "createdTime": now_ms,
-                }
-            }
+            _metadata(schema_json, partition_by, prior_config, now_ms)
         )
     if mode == "overwrite":
-        actions.extend(
-            {
-                "remove": {
-                    "path": p,
-                    "partitionValues": prior_files[p].get(
-                        "partitionValues", {}
-                    ),
-                    "deletionTimestamp": now_ms,
-                    "dataChange": True,
-                }
-            }
-            for p in sorted(prior_files)
-        )
+        actions.extend(_removes(prior_files, sorted(prior_files), now_ms))
     actions.extend({"add": a} for a in adds)
     # appends commute with racing appends (optimistic retry at N+1);
     # an overwrite or schema-pinning write conflicts with any racing
@@ -1224,8 +1230,6 @@ def write_delta(
         table_dir,
         version,
         actions,
-        checkpoint_interval,
-        removed_files=frozenset(prior_files) if mode == "overwrite" else frozenset(),
         allow_concurrent_adds=(
             mode == "append" and not any("metaData" in a for a in actions)
         ),
@@ -1265,8 +1269,24 @@ def live_files(
       files without stats, and predicates outside the skipping subset,
       are kept. Unlike ``partition_predicate`` it never changes
       semantics — callers still apply the row filter to the scan."""
-    state = _replay(table_dir, version)
-    paths = _prune_files(spark, state, partition_predicate, table_dir)
+    return _prune_files(
+        spark, _replay(table_dir, version), partition_predicate, table_dir,
+        data_predicate,
+    )
+
+
+def _prune_files(
+    spark: SparkSession | None,
+    state: dict,
+    partition_predicate: str | None,
+    table_dir: str,
+    data_predicate: str | None = None,
+) -> list[str]:
+    """:func:`live_files` over an ALREADY-REPLAYED state (so callers
+    that hold a state dict never replay the log twice)."""
+    paths = sorted(state["files"])
+    if partition_predicate is not None and paths:
+        paths = _partition_pruned(spark, state, paths, partition_predicate, table_dir)
     if data_predicate is not None:
         paths = prune_by_stats(
             state["files"], paths, data_predicate, _stats_col_map(state),
@@ -1275,17 +1295,14 @@ def live_files(
     return paths
 
 
-def _prune_files(
+def _partition_pruned(
     spark: SparkSession | None,
     state: dict,
-    partition_predicate: str | None,
+    paths: list[str],
+    partition_predicate: str,
     table_dir: str,
 ) -> list[str]:
-    """Pruning over an ALREADY-REPLAYED state (so callers that hold a
-    state dict never replay the log twice)."""
-    paths = sorted(state["files"])
-    if partition_predicate is None or not paths:
-        return paths
+    """The ``paths`` whose partitionValues satisfy ``partition_predicate``."""
     parts = state["partition_columns"]
     if not parts:
         raise ValueError(
@@ -1470,12 +1487,9 @@ def read_delta(
     schema. Reading a version older than the vacuum horizon fails fast
     with the earliest retained version in the error."""
     state = _replay(table_dir, version)
-    paths = _prune_files(spark, state, partition_predicate, table_dir)
-    if data_predicate is not None:
-        paths = prune_by_stats(
-            state["files"], paths, data_predicate, _stats_col_map(state),
-            temporal_ok=_temporal_skipping_ok(),
-        )
+    paths = _prune_files(
+        spark, state, partition_predicate, table_dir, data_predicate
+    )
     df = _read_adds(spark, table_dir, state, paths)
     if data_predicate is not None:
         df = df.where(F.expr(data_predicate))
@@ -1513,7 +1527,6 @@ def delete_where(
     table_dir: str,
     predicate,
     partition_predicate: str | None = None,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
     """COPY-ON-WRITE DELETE (the Delta `DELETE FROM` write pattern):
     rewrite ONLY the files that contain matching rows — surviving rows
@@ -1543,16 +1556,14 @@ def delete_where(
     _require_dml_allowed(state, table_dir, "DELETE")
     schema = StructType.fromJson(json.loads(state["schema_json"]))
     parts = state["partition_columns"]
-    candidates = _prune_files(spark, state, partition_predicate, table_dir)
-    if isinstance(predicate, str):
-        # stats pre-prune (sound, log-only): a file whose stats exclude
-        # every predicate-TRUE row cannot be a hit file, so the
-        # hit-detection scan skips it — the point-delete (GDPR erasure)
-        # then touches only stats-matching files before any parquet I/O
-        candidates = prune_by_stats(
-            state["files"], candidates, predicate, _stats_col_map(state),
-            temporal_ok=_temporal_skipping_ok(),
-        )
+    # a string predicate also stats-prunes (sound, log-only): a file
+    # whose stats exclude every predicate-TRUE row cannot be a hit file,
+    # so the point-delete (GDPR erasure) touches only stats-matching
+    # files before any parquet I/O
+    candidates = _prune_files(
+        spark, state, partition_predicate, table_dir,
+        predicate if isinstance(predicate, str) else None,
+    )
     if not state["files"]:
         raise ValueError(f"nothing live to delete from in {table_dir}")
     now_ms = int(time.time() * 1000)
@@ -1573,12 +1584,10 @@ def delete_where(
         # no-op delete still commits (audit trail), with no file churn;
         # a racing dataChange add could carry rows the predicate matches,
         # so the "nothing to delete" decision conflicts with it
-        version = state["version"] + 1
         return _commit_retry(
             table_dir,
-            version,
+            state["version"] + 1,
             [_commit_info("DELETE", dict(del_params), now_ms)],
-            checkpoint_interval,
             read_files=frozenset(candidates),
             allow_concurrent_adds=False,
         )
@@ -1594,27 +1603,13 @@ def delete_where(
             "DELETE", dict(del_params, rewrittenFiles=len(hits)), now_ms
         )
     ]
-    actions.extend(
-        {
-            "remove": {
-                "path": h,
-                "partitionValues": state["files"][h].get(
-                    "partitionValues", {}
-                ),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for h in hits
-    )
+    actions.extend(_removes(state["files"], hits, now_ms))
     actions.extend({"add": a} for a in adds)
     return _commit_retry(
         table_dir,
         version,
         actions,
-        checkpoint_interval,
         read_files=frozenset(candidates),
-        removed_files=frozenset(hits),
         allow_concurrent_adds=False,
     )
 
@@ -1707,7 +1702,6 @@ def merge_delta_scd1(
     keys: list[str],
     txn: tuple[str, int] | None = None,
     merge_schema: bool = False,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
     """MERGE INTO on the Delta format — copy-on-write SCD-1 upsert, the
     per-batch warehouse loader pattern (the reference's core loop is
@@ -1765,12 +1759,7 @@ def merge_delta_scd1(
             raise ValueError(f"merge source lacks key columns {missing_keys}")
         out_schema = _evolved_merge_schema(schema, source, keys, parts)
         source = _align_to(source, out_schema)
-    if txn is not None:
-        seen = last_txn_version(table_dir, txn[0])
-        if seen is not None and seen >= txn[1]:
-            raise ValueError(
-                f"txn {txn[0]}@{txn[1]} already committed (latest {seen})"
-            )
+    _check_txn(state["txns"], txn)
     paths = sorted(state["files"])
     now_ms = int(time.time() * 1000)
     # no dedup: both uses are semi/anti joins, whose results do not
@@ -1825,34 +1814,14 @@ def merge_delta_scd1(
         # explicit evolution: re-pin the schema so every reader (and
         # the null-fill of un-rewritten files) follows the new metaData
         actions.append(
-            {
-                "metaData": {
-                    "id": uuid.uuid4().hex,
-                    "format": {"provider": "parquet", "options": {}},
-                    "schemaString": out_schema.json(),
-                    "partitionColumns": parts,
-                    "configuration": dict(
-                        state["meta"].get("configuration") or {}
-                    ),
-                    "createdTime": now_ms,
-                }
-            }
+            _metadata(
+                out_schema.json(), parts, state["meta"].get("configuration"),
+                now_ms,
+            )
         )
     if txn is not None:
         actions.append({"txn": {"appId": txn[0], "version": txn[1]}})
-    actions.extend(
-        {
-            "remove": {
-                "path": h,
-                "partitionValues": state["files"][h].get(
-                    "partitionValues", {}
-                ),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for h in hits
-    )
+    actions.extend(_removes(state["files"], hits, now_ms))
     actions.extend({"add": a} for a in adds)
     # the hit probe scanned every live file; racing adds could carry
     # matched keys, racing removes of probed files invalidate the scan
@@ -1860,9 +1829,7 @@ def merge_delta_scd1(
         table_dir,
         version,
         actions,
-        checkpoint_interval,
         read_files=frozenset(paths),
-        removed_files=frozenset(hits),
         allow_concurrent_adds=False,
     )
 
@@ -1877,7 +1844,6 @@ def compact_table(
     table_dir: str,
     target_files: int = 1,
     zorder_by: list[str] | None = None,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
     """OPTIMIZE (bin-packing compaction): rewrite the live file set into
     ``target_files`` files (at most ``target_files`` PER PARTITION
@@ -2007,19 +1973,7 @@ def compact_table(
             now_ms,
         )
     ]
-    actions.extend(
-        {
-            "remove": {
-                "path": p,
-                "partitionValues": state["files"][p].get(
-                    "partitionValues", {}
-                ),
-                "deletionTimestamp": now_ms,
-                "dataChange": False,
-            }
-        }
-        for p in live
-    )
+    actions.extend(_removes(state["files"], live, now_ms, data_change=False))
     actions.extend({"add": a} for a in adds)
     # compaction commutes with racing APPENDS (it only retires the OLD
     # live set — new files stay live untouched); it conflicts with any
@@ -2028,9 +1982,7 @@ def compact_table(
         table_dir,
         version,
         actions,
-        checkpoint_interval,
         read_files=frozenset(live),
-        removed_files=frozenset(live),
         allow_concurrent_adds=True,
     )
 
@@ -2074,13 +2026,9 @@ def read_delta_changes(
     schema = StructType.fromJson(json.loads(state["schema_json"]))
     adds: dict[str, dict] = {}
     for v in range(from_version + 1, to_version + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action and action["add"].get("dataChange", True):
-                    adds[action["add"]["path"]] = action["add"]
+        for action in _read_commit(table_dir, v):
+            if "add" in action and action["add"].get("dataChange", True):
+                adds[action["add"]["path"]] = action["add"]
     if not adds:
         return spark.createDataFrame([], schema), to_version
     # change files may post-date `state`'s live set; read them directly
@@ -2173,21 +2121,17 @@ def read_delta_cdf(
     for v in range(from_version + 1, to_version + 1):
         adds: dict[str, dict] = {}
         removes: dict[str, dict] = {}
-        with open(_commit_path(table_dir, v)) as f:
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action:
-                    cur_files[action["add"]["path"]] = action["add"]
-                    if action["add"].get("dataChange", True):
-                        adds[action["add"]["path"]] = action["add"]
-                elif "remove" in action:
-                    retired = cur_files.pop(
-                        action["remove"]["path"], action["remove"]
-                    )
-                    if action["remove"].get("dataChange", True):
-                        removes[action["remove"]["path"]] = retired
+        for action in _read_commit(table_dir, v):
+            if "add" in action:
+                cur_files[action["add"]["path"]] = action["add"]
+                if action["add"].get("dataChange", True):
+                    adds[action["add"]["path"]] = action["add"]
+            elif "remove" in action:
+                retired = cur_files.pop(
+                    action["remove"]["path"], action["remove"]
+                )
+                if action["remove"].get("dataChange", True):
+                    removes[action["remove"]["path"]] = retired
         if not adds and not removes:
             continue
         # SYMMETRIC multiset difference per commit: a copy-on-write
@@ -2254,7 +2198,6 @@ def restore_table(
     table_dir: str,
     version: int | None = None,
     timestamp_ms: int | None = None,
-    checkpoint_interval: int | None = CHECKPOINT_INTERVAL,
 ) -> int:
     """RESTORE TABLE ... TO VERSION/TIMESTAMP AS OF — production
     Delta's rollback: commit a NEW version whose live set equals the
@@ -2295,15 +2238,7 @@ def restore_table(
     ):
         actions.append({"metaData": dict(old["meta"], createdTime=now_ms)})
     actions.extend(
-        {
-            "remove": {
-                "path": p,
-                "partitionValues": cur["files"][p].get("partitionValues", {}),
-                "deletionTimestamp": now_ms,
-                "dataChange": True,
-            }
-        }
-        for p in sorted(set(cur["files"]) - set(old["files"]))
+        _removes(cur["files"], sorted(set(cur["files"]) - set(old["files"])), now_ms)
     )
     actions.extend(
         {"add": dict(old["files"][p], dataChange=True, modificationTime=now_ms)}
@@ -2313,9 +2248,7 @@ def restore_table(
         table_dir,
         cur["version"] + 1,
         actions,
-        checkpoint_interval,
         read_files=frozenset(cur["files"]),
-        removed_files=frozenset(set(cur["files"]) - set(old["files"])),
         allow_concurrent_adds=False,
     )
 
@@ -2388,7 +2321,7 @@ def cleanup_log(table_dir: str, keep_versions: int = 10) -> list[str]:
     checkpoint, which ``tests/test_delta_log.py`` proves by deleting
     exactly these files. Returns the deleted names.
 
-    A per-micro-batch streaming sink plus ``checkpoint_interval`` and
+    A per-micro-batch streaming sink plus ``CHECKPOINT_INTERVAL`` and
     this cleanup gives a log whose size is O(keep_versions + interval)
     forever, independent of total commits. No-op (returns []) until a
     checkpoint at-or-below the horizon exists — cleanup never makes a
@@ -2422,12 +2355,9 @@ def table_history(table_dir: str) -> list[dict]:
     out = []
     for v in table_versions(table_dir):
         info = {"version": v}
-        with open(_commit_path(table_dir, v)) as f:
-            for line in f:
-                if line.strip():
-                    action = json.loads(line)
-                    if "commitInfo" in action:
-                        info.update(action["commitInfo"])
-                        break
+        for action in _read_commit(table_dir, v):
+            if "commitInfo" in action:
+                info.update(action["commitInfo"])
+                break
         out.append(info)
     return out

@@ -60,7 +60,7 @@ from pyspark.sql.datasource import (
 from pyspark.sql.types import StructType
 
 from stadvdb_olap_spark.sources.delta_log import (
-    _commit_path,
+    _read_commit,
     _replay,
     earliest_retained_version,
     table_versions,
@@ -98,23 +98,21 @@ def _adds_in_range(
     readers (read_delta / read_delta_cdf), which apply them."""
     out: list[dict] = []
     for v in range(after_version + 1, to_version + 1):
-        with open(_commit_path(table_dir, v)) as f:
-            adds = []
-            for line in f:
-                if not line.strip():
-                    continue
-                action = json.loads(line)
-                if "add" in action and action["add"].get("dataChange", True):
-                    if action["add"].get("deletionVector"):
-                        raise ValueError(
-                            f"delta_tail: commit {v} of {table_dir} adds "
-                            f"{action['add']['path']} with a deletion "
-                            "vector; streaming would resurrect its "
-                            "deleted rows — use the batch readers "
-                            "(read_delta / read_delta_cdf) for DV tables"
-                        )
-                    adds.append(action["add"])
-            out.extend(sorted(adds, key=lambda a: a["path"]))
+        adds = [
+            a["add"]
+            for a in _read_commit(table_dir, v)
+            if "add" in a and a["add"].get("dataChange", True)
+        ]
+        for add in adds:
+            if add.get("deletionVector"):
+                raise ValueError(
+                    f"delta_tail: commit {v} of {table_dir} adds "
+                    f"{add['path']} with a deletion "
+                    "vector; streaming would resurrect its "
+                    "deleted rows — use the batch readers "
+                    "(read_delta / read_delta_cdf) for DV tables"
+                )
+        out.extend(sorted(adds, key=lambda a: a["path"]))
     return out
 
 
@@ -323,25 +321,21 @@ def _cdf_changes_in_commit(table_dir: str, v: int) -> tuple[list, list]:
     ``read_delta_cdf`` for DV tables."""
     adds: list[dict] = []
     removes: list[dict] = []
-    with open(_commit_path(table_dir, v)) as f:
-        for line in f:
-            if not line.strip():
-                continue
-            action = json.loads(line)
-            kind = "add" if "add" in action else (
-                "remove" if "remove" in action else None
+    for action in _read_commit(table_dir, v):
+        kind = "add" if "add" in action else (
+            "remove" if "remove" in action else None
+        )
+        if kind is None or not action[kind].get("dataChange", True):
+            continue
+        if action[kind].get("deletionVector"):
+            raise ValueError(
+                f"delta_tail readChangeFeed: commit {v} of "
+                f"{table_dir} carries a deletion vector on "
+                f"{action[kind]['path']}; the streaming diff would "
+                "mis-count its masked rows — use the batch "
+                "read_delta_cdf for DV tables"
             )
-            if kind is None or not action[kind].get("dataChange", True):
-                continue
-            if action[kind].get("deletionVector"):
-                raise ValueError(
-                    f"delta_tail readChangeFeed: commit {v} of "
-                    f"{table_dir} carries a deletion vector on "
-                    f"{action[kind]['path']}; the streaming diff would "
-                    "mis-count its masked rows — use the batch "
-                    "read_delta_cdf for DV tables"
-                )
-            (adds if kind == "add" else removes).append(action[kind])
+        (adds if kind == "add" else removes).append(action[kind])
     return adds, removes
 
 

@@ -272,7 +272,10 @@ def test_reader_gate_refuses_id_column_mapping(spark, tmp_path):
         read_delta(spark, t)
 
 
-def test_checkpoint_refuses_live_dvs_and_auto_skips(spark, tmp_path):
+def test_checkpoint_refuses_live_dvs_and_auto_skips(
+    spark, tmp_path, monkeypatch
+):
+    from stadvdb_olap_spark.sources import delta_log
     from stadvdb_olap_spark.sources.delta_log import (
         checkpoint_table,
         checkpoint_versions,
@@ -284,11 +287,9 @@ def test_checkpoint_refuses_live_dvs_and_auto_skips(spark, tmp_path):
     with pytest.raises(ValueError, match="deletion vectors"):
         checkpoint_table(t)
     # auto-checkpoint must silently skip, not fail the append
+    monkeypatch.setattr(delta_log, "CHECKPOINT_INTERVAL", 3)
     for i in range(10):
-        write_delta(
-            spark.range(100 + i, 101 + i), t, mode="append",
-            checkpoint_interval=3,
-        )
+        write_delta(spark.range(100 + i, 101 + i), t, mode="append")
     assert checkpoint_versions(t) == []
     # and the DV is still honored through all those appends
     ids = sorted(r.id for r in read_delta(spark, t).collect())

@@ -349,24 +349,27 @@ def test_delta_append_stream_is_exactly_once(spark, tmp_path):
 # ---------------------------------------------------------------------------
 
 
-def test_delta_checkpoint_written_and_replay_starts_from_it(spark, tmp_path):
-    """Every checkpoint_interval commits a parquet checkpoint +
+def test_delta_checkpoint_written_and_replay_starts_from_it(
+    spark, tmp_path, monkeypatch
+):
+    """Every CHECKPOINT_INTERVAL commits a parquet checkpoint +
     _last_checkpoint lands, and _replay reads THROUGH the checkpoint:
     commits below it can disappear from the log without breaking
     latest-version reads — the O(interval) read the streaming sink's
     per-batch commits need."""
+    from stadvdb_olap_spark.sources import delta_log
     from stadvdb_olap_spark.sources.delta_log import (
         _replay,
         checkpoint_versions,
     )
 
     t = str(tmp_path / "tbl")
+    monkeypatch.setattr(delta_log, "CHECKPOINT_INTERVAL", 5)
     for i in range(13):
         write_delta(
             spark.createDataFrame([(i, i * 10)], "id long, v long"),
             t,
             mode="append" if i else "overwrite",
-            checkpoint_interval=5,
         )
     assert checkpoint_versions(t) == [5, 10]
     lc = json.load(open(os.path.join(t, "_delta_log", "_last_checkpoint")))
@@ -1223,6 +1226,33 @@ def test_delta_compact_commutes_with_racing_append(
     # survive alongside the compacted ones
     assert sorted(r.id for r in read_delta(spark, t).collect()) == list(
         range(9)
+    )
+
+
+def test_delta_overwrite_conflicts_with_racing_optimize(
+    spark, tmp_path, monkeypatch
+):
+    """OPTIMIZE's adds carry dataChange=false and an overwrite reads no
+    files, so only the overwrite's own remove set can catch this race:
+    both commits retire the same files."""
+    from stadvdb_olap_spark.sources.delta_log import (
+        ConcurrentWriteError,
+        compact_table,
+    )
+
+    t = str(tmp_path / "tbl")
+    write_delta(spark.range(0, 6).repartition(3), t, mode="overwrite")
+
+    def interloper():
+        compact_table(spark, t, target_files=1)
+
+    _interleave(monkeypatch, interloper)
+    with pytest.raises(ConcurrentWriteError, match="also removes"):
+        write_delta(spark.range(10, 12), t, mode="overwrite")
+    # the compaction landed alone: content unchanged
+    assert table_versions(t) == [0, 1]
+    assert sorted(r.id for r in read_delta(spark, t).collect()) == list(
+        range(6)
     )
 
 

@@ -21,18 +21,27 @@ from stadvdb_olap_spark.sources.delta_log import (
     checkpoint_table,
     compact_table,
     delete_where,
+    drop_check_constraint,
+    merge_delta_scd1,
+    restore_table,
+    set_check_constraint,
+    set_table_properties,
     table_versions,
     write_delta,
 )
 
 
-def _normalized_log(table_dir: str) -> list[list[dict]]:
+def _normalized_log(table_dir: str, meta_ids: bool = False) -> list[list[dict]]:
     """All commit actions, volatile fields replaced by stable tokens.
 
     File paths are replaced by sequence tokens CONSISTENTLY across
     actions (an add and a later remove of the same file normalize to
-    the same token), so copy-on-write identity is part of the golden."""
+    the same token), so copy-on-write identity is part of the golden.
+    With ``meta_ids`` the metaData ids get the same treatment, so the
+    golden also pins which commits keep the table id and which mint a
+    fresh one."""
     path_tokens: dict[str, str] = {}
+    id_tokens: dict[str, str] = {}
 
     def tok(path: str) -> str:
         if path not in path_tokens:
@@ -53,7 +62,11 @@ def _normalized_log(table_dir: str) -> list[list[dict]]:
             if kind == "commitInfo":
                 body["timestamp"] = 0
             elif kind == "metaData":
-                body["id"] = "<uuid>"
+                body["id"] = (
+                    id_tokens.setdefault(body["id"], f"<meta-{len(id_tokens)}>")
+                    if meta_ids
+                    else "<uuid>"
+                )
                 body["createdTime"] = 0
                 body["schemaString"] = json.loads(body["schemaString"])
             elif kind == "add":
@@ -176,6 +189,149 @@ def test_delta_log_matches_protocol_golden(spark, tmp_path):
     golden = [list(c) for c in GOLDEN]
     golden[3][3]["add"] = dict(golden[3][3]["add"], dataChange=False)
     assert got == golden
+
+
+def _meta(meta_id, fields, configuration=None):
+    return {"metaData": {"id": meta_id,
+                         "format": {"provider": "parquet", "options": {}},
+                         "schemaString": {"type": "struct", "fields": fields},
+                         "partitionColumns": [],
+                         "configuration": configuration or {},
+                         "createdTime": 0}}
+
+
+def _remove(path):
+    return {"remove": {"path": path, "partitionValues": {},
+                       "deletionTimestamp": 0, "dataChange": True}}
+
+
+def _add(path, lo, hi, nulls, n):
+    return {"add": {"path": path, "partitionValues": {}, "size": "<bytes>",
+                    "modificationTime": 0, "dataChange": True,
+                    "stats": {"minValues": lo, "maxValues": hi,
+                              "nullCount": nulls, "numRecords": n}}}
+
+
+_IDS = [_field("id", "long"), _field("s", "string")]
+_IDS_N = _IDS + [_field("n", "integer")]
+_NO_NULLS = {"id": 0, "s": 0}
+
+GOLDEN_DML = [
+    # v0: CREATE
+    [
+        {"commitInfo": dict(_CI, operation="WRITE",
+                            operationParameters={"mode": "OVERWRITE",
+                                                 "partitionBy": "[]"})},
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}},
+        _meta("<meta-0>", _IDS),
+        _add("<file-0>", {"id": 1, "s": "a"}, {"id": 2, "s": "b"},
+             _NO_NULLS, 2),
+    ],
+    # v1: overwrite of a live table, same schema — removes every prior
+    # file and commits no protocol/metaData
+    [
+        {"commitInfo": dict(_CI, operation="WRITE",
+                            operationParameters={"mode": "OVERWRITE",
+                                                 "partitionBy": "[]"})},
+        _remove("<file-0>"),
+        _add("<file-1>", {"id": 1, "s": "a"}, {"id": 3, "s": "c"},
+             _NO_NULLS, 3),
+    ],
+    # v2: MERGE carrying a txn — txn rides before the removes;
+    # survivors file, then the source batch file
+    [
+        {"commitInfo": dict(_CI, operation="MERGE",
+                            operationParameters={"keys": '["id"]',
+                                                 "matchedFiles": 1,
+                                                 "schemaEvolved": False})},
+        {"txn": {"appId": "golden_merge", "version": 1}},
+        _remove("<file-1>"),
+        _add("<file-2>", {"id": 1, "s": "a"}, {"id": 3, "s": "c"},
+             _NO_NULLS, 2),
+        _add("<file-3>", {"id": 2, "s": "B"}, {"id": 4, "s": "d"},
+             _NO_NULLS, 2),
+    ],
+    # v3: schema-evolving MERGE — a fresh metaData (new id) before the
+    # removes; survivors null-fill the new column
+    [
+        {"commitInfo": dict(_CI, operation="MERGE",
+                            operationParameters={"keys": '["id"]',
+                                                 "matchedFiles": 1,
+                                                 "schemaEvolved": True})},
+        _meta("<meta-1>", _IDS_N),
+        _remove("<file-2>"),
+        _add("<file-4>", {"id": 3, "s": "c"}, {"id": 3, "s": "c"},
+             {"id": 0, "n": 1, "s": 0}, 1),
+        _add("<file-5>", {"id": 1, "n": 7, "s": "A"},
+             {"id": 1, "n": 7, "s": "A"}, {"id": 0, "n": 0, "s": 0}, 1),
+    ],
+    # v4: RESTORE to v0 — re-pins v0's metaData (its id included),
+    # removes everything live since, re-adds v0's file
+    [
+        {"commitInfo": dict(_CI, operation="RESTORE",
+                            operationParameters={"version": 0,
+                                                 "sourceVersion": 3})},
+        _meta("<meta-0>", _IDS),
+        _remove("<file-3>"),
+        _remove("<file-4>"),
+        _remove("<file-5>"),
+        _add("<file-0>", {"id": 1, "s": "a"}, {"id": 2, "s": "b"},
+             _NO_NULLS, 2),
+    ],
+    # v5: DELETE matching nothing — an audit-only commit
+    [
+        {"commitInfo": dict(_CI, operation="DELETE",
+                            operationParameters={"predicate": "id = 999"})},
+    ],
+    # v6: ADD CONSTRAINT — writer protocol bumps to 3, then the
+    # configuration-only metaData (same table id)
+    [
+        {"commitInfo": dict(_CI, operation="ADD CONSTRAINT",
+                            operationParameters={"name": "id_pos",
+                                                 "expr": "id > 0"})},
+        {"protocol": {"minReaderVersion": 1, "minWriterVersion": 3}},
+        _meta("<meta-0>", _IDS, {"delta.constraints.id_pos": "id > 0"}),
+    ],
+    # v7: SET TBLPROPERTIES
+    [
+        {"commitInfo": dict(_CI, operation="SET TBLPROPERTIES",
+                            operationParameters={
+                                "properties": '{"owner": "golden"}'})},
+        _meta("<meta-0>", _IDS, {"delta.constraints.id_pos": "id > 0",
+                                 "owner": "golden"}),
+    ],
+    # v8: DROP CONSTRAINT
+    [
+        {"commitInfo": dict(_CI, operation="DROP CONSTRAINT",
+                            operationParameters={"name": "id_pos"})},
+        _meta("<meta-0>", _IDS, {"owner": "golden"}),
+    ],
+]
+
+
+def test_delta_dml_log_matches_protocol_golden(spark, tmp_path):
+    """The DML, RESTORE and table-property commit shapes: overwrite of
+    a live table, MERGE with txn, schema-evolving MERGE, RESTORE across
+    a schema change, no-op DELETE, ADD/DROP CONSTRAINT and SET
+    TBLPROPERTIES."""
+    t = str(tmp_path / "tbl")
+    schema = "id long, s string"
+
+    def frame(rows, ddl=schema):
+        return spark.createDataFrame(rows, ddl).coalesce(1)
+
+    write_delta(frame([(1, "a"), (2, "b")]), t, mode="overwrite")
+    write_delta(frame([(1, "a"), (2, "b"), (3, "c")]), t, mode="overwrite")
+    merge_delta_scd1(spark, t, frame([(2, "B"), (4, "d")]), ["id"],
+                     txn=("golden_merge", 1))
+    merge_delta_scd1(spark, t, frame([(1, "A", 7)], schema + ", n int"),
+                     ["id"], merge_schema=True)
+    restore_table(t, version=0)
+    delete_where(spark, t, "id = 999")
+    set_check_constraint(spark, t, "id_pos", "id > 0")
+    set_table_properties(t, {"owner": "golden"})
+    drop_check_constraint(t, "id_pos")
+    assert _normalized_log(t, meta_ids=True) == GOLDEN_DML
 
 
 def test_delta_checkpoint_matches_protocol_columns(spark, tmp_path):

@@ -166,8 +166,9 @@ def test_delta_tail_restart_resumes_from_checkpoint(spark, tmp_path):
 
 
 def test_cleanup_log_bounds_metadata_and_keeps_window_readable(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
+    from stadvdb_olap_spark.sources import delta_log
     from stadvdb_olap_spark.sources.delta_log import (
         checkpoint_versions,
         cleanup_log,
@@ -176,12 +177,12 @@ def test_cleanup_log_bounds_metadata_and_keeps_window_readable(
     )
 
     t = str(tmp_path / "tbl")
+    monkeypatch.setattr(delta_log, "CHECKPOINT_INTERVAL", 5)
     for i in range(13):
         write_delta(
             spark.createDataFrame([(i, i)], "id long, v long"),
             t,
             mode="append" if i else "overwrite",
-            checkpoint_interval=5,
         )
     assert checkpoint_versions(t) == [5, 10]
     deleted = cleanup_log(t, keep_versions=3)
@@ -209,7 +210,6 @@ def test_cleanup_log_noop_without_covering_checkpoint(spark, tmp_path):
             spark.createDataFrame([(i, i)], "id long, v long"),
             t,
             mode="append" if i else "overwrite",
-            checkpoint_interval=None,
         )
     assert cleanup_log(t, keep_versions=2) == []
 
@@ -321,11 +321,12 @@ def test_delta_tail_null_fills_schema_evolved_history(spark, tmp_path):
 
 
 def test_delta_tail_fails_fast_below_cleaned_or_vacuumed_floor(
-    spark, tmp_path
+    spark, tmp_path, monkeypatch
 ):
     """Review regression: a stream whose offset needs cleaned commits or
     vacuumed files raises the clear retention error, not a raw
     FileNotFoundError."""
+    from stadvdb_olap_spark.sources import delta_log
     from stadvdb_olap_spark.sources.delta_log import (
         cleanup_log,
         vacuum_table,
@@ -335,12 +336,12 @@ def test_delta_tail_fails_fast_below_cleaned_or_vacuumed_floor(
     )
 
     t = str(tmp_path / "tbl")
+    monkeypatch.setattr(delta_log, "CHECKPOINT_INTERVAL", 5)
     for i in range(13):
         write_delta(
             spark.createDataFrame([(i, i)], "id long, v long"),
             t,
             mode="append" if i else "overwrite",
-            checkpoint_interval=5,
         )
     cleanup_log(t, keep_versions=3)
     reader = _DeltaTailStreamReader({"path": t})

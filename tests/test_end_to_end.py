@@ -230,11 +230,13 @@ def test_curation_app_policies_match_certified_queries(spark):
 
 def test_run_pipeline_on_delta_format_with_time_travel(spark, tmp_path):
     """table_format='delta': every stage lands as one Delta-log
-    overwrite version with OPTIMIZE maintenance, the report carries the
-    committed versions, and a SECOND run leaves the first build
-    time-travelable — the lakehouse-sink loop end to end."""
+    overwrite version, the report carries the committed versions, the
+    caller's OPTIMIZE composes with the load, and a SECOND run leaves
+    the first build time-travelable — the lakehouse-sink loop end to
+    end."""
     from stadvdb_olap_spark.app import run_pipeline
     from stadvdb_olap_spark.sources.delta_log import (
+        compact_table,
         read_delta,
         table_history,
     )
@@ -242,13 +244,14 @@ def test_run_pipeline_on_delta_format_with_time_travel(spark, tmp_path):
     out = str(tmp_path / "warehouse")
     r1 = run_pipeline(
         spark, "/root/testdata/sf0.001", out_dir=out,
-        table_format="delta", compact_target=2,
+        table_format="delta",
     )
     for stage, m in r1.items():
         assert m["rows"] > 0, stage
         assert "delta_version" in m, stage
     fact_dir = out + "/fact_star"
     v1 = r1["fact_star"]["delta_version"]
+    optimize_version = compact_table(spark, fact_dir, target_files=2)
     assert read_delta(spark, fact_dir).count() == r1["fact_star"]["rows"]
 
     # second load: new overwrite version; first build still readable
@@ -264,21 +267,20 @@ def test_run_pipeline_on_delta_format_with_time_travel(spark, tmp_path):
     )
     ops = [h["operation"] for h in table_history(fact_dir)]
     assert "PIPELINE LOAD" in ops
-    # OPTIMIZE commits only when the live set exceeds compact_target
+    # OPTIMIZE commits only when the live set exceeds target_files
     # (AQE often coalesces these small builds to one file — a no-op
-    # compaction must NOT burn an empty version); the report reflects
-    # whichever happened.
+    # compaction must NOT burn an empty version); the returned version
+    # reflects whichever happened.
     if "OPTIMIZE" in ops:
-        assert r1["fact_star"]["optimize_version"] > v1
+        assert optimize_version > v1
     else:
-        assert r1["fact_star"]["optimize_version"] == v1
+        assert optimize_version == v1
 
 
 def test_run_pipeline_concurrent_landing(spark, duck, tmp_path):
     """The five stages land concurrently: the report keeps stage order,
-    every table equals its catalog oracle, the Delta landing region's
-    timestamp-type pin is undone afterwards, and a count-only run
-    reports the same rows."""
+    every table equals its catalog oracle, and the Delta landing
+    region's timestamp-type pin is undone afterwards."""
     from stadvdb_olap_spark.app import run_pipeline
     from stadvdb_olap_spark.sources.delta_log import read_delta
     from tests.conftest import assert_frames_match
@@ -295,11 +297,6 @@ def test_run_pipeline_concurrent_landing(spark, duck, tmp_path):
         assert table.count() == m["rows"], name
         assert_frames_match(table, duck.execute(REGISTRY[name].oracle), name)
     assert spark.conf.get(ts_key, None) == prior
-    # without out_dir the same concurrent path only counts
-    counted = run_pipeline(spark, SF_DIR)
-    assert {n: m["rows"] for n, m in counted.items()} == {
-        n: m["rows"] for n, m in report.items()
-    }
 
 
 def test_run_pipeline_reraises_first_failure_after_others_commit(

@@ -20,6 +20,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import IDLE_CALIBRATION_BAND_S
 from stadvdb_olap_spark.plans.catalog import REGISTRY, _ensure_loaded
 from stadvdb_olap_spark.session import get_session
 
@@ -99,7 +100,7 @@ def main() -> None:
                 "sf_dir": sf_dir,
                 "runs": runs,
                 "calibration_s": round(cal_best, 3),
-                "idle_calibration_band_s": [0.076, 0.091],
+                "idle_calibration_band_s": list(IDLE_CALIBRATION_BAND_S),
             }
         )
     )
